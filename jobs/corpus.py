@@ -16,7 +16,7 @@ from __future__ import annotations
 import argparse
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -391,7 +391,9 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    spark = SparkSession.builder.appName("wfc-corpus").getOrCreate()
+    from who_focus_crawler_spark.session import submit_spark
+
+    spark = submit_spark("wfc-corpus")
     if args.from_crawl:
         from who_focus_crawler_spark import schemas
         from who_focus_crawler_spark.checkpoint.snapshot import SnapshotCatalog

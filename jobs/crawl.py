@@ -15,9 +15,8 @@ from __future__ import annotations
 import argparse
 import json
 
-from pyspark.sql import SparkSession
-
 from who_focus_crawler_spark.plans.crawl import CrawlConfig, run_crawl
+from who_focus_crawler_spark.session import submit_spark
 from who_focus_crawler_spark.sources.fixture_web import E2E_WEB, UNIT_WEB, WebConfig
 
 
@@ -84,7 +83,7 @@ def main() -> None:
             mirror_every=args.mirror_every,
         )
 
-    spark = SparkSession.builder.appName("wfc-crawl").getOrCreate()
+    spark = submit_spark("wfc-crawl")
     cfg = CrawlConfig(
         web=web,
         checkpoint_dir=args.checkpoint_dir,

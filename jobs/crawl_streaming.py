@@ -17,9 +17,8 @@ import argparse
 import json
 import os
 
-from pyspark.sql import SparkSession
-
 from who_focus_crawler_spark.plans.crawl import CrawlConfig
+from who_focus_crawler_spark.session import submit_spark
 from who_focus_crawler_spark.sources.fixture_web import (
     E2E_WEB,
     UNIT_WEB,
@@ -45,7 +44,7 @@ def main() -> None:
         "e2e": E2E_WEB,
         "custom": WebConfig(n_hosts=args.hosts, n_pages=args.pages),
     }[args.tier]
-    spark = SparkSession.builder.appName("wfc-crawl-streaming").getOrCreate()
+    spark = submit_spark("wfc-crawl-streaming")
     cfg = CrawlConfig(
         web=web,
         checkpoint_dir=os.path.join(args.work_dir, "catalog"),

@@ -24,7 +24,7 @@ from __future__ import annotations
 import argparse
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -100,7 +100,9 @@ def main() -> None:
         help="order each shard by this column desc (e.g. quality)",
     )
     args = ap.parse_args()
-    spark = SparkSession.builder.appName("wfc-shards").getOrCreate()
+    from who_focus_crawler_spark.session import submit_spark
+
+    spark = submit_spark("wfc-shards")
     docs = spark.read.parquet(args.input)
     stats = run_shard_layout(
         docs,

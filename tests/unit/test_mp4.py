@@ -89,6 +89,24 @@ def test_lying_box_sizes_refused():
         parse_mp4_meta(ftyp_only)
 
 
+@pytest.mark.parametrize("ver", [0, 1])
+def test_leaf_reads_bounded_by_own_box(ver):
+    """An mvhd whose size (10) leaves no room for its fields raises
+    instead of reading timescale/duration out of the next box."""
+    good = encode_mp4_skeleton(100, width=16, height=9)
+    ftyp_len = struct.unpack(">I", good[:4])[0]
+    moov_len = struct.unpack(">I", good[ftyp_len:ftyp_len + 4])[0]
+    short_mvhd = struct.pack(">I", 10) + b"mvhd" + bytes([ver, 0])
+    body = short_mvhd + good[ftyp_len + 8:ftyp_len + moov_len]
+    bad = (
+        good[:ftyp_len]
+        + struct.pack(">I", len(body) + 8) + b"moov" + body
+        + good[ftyp_len + moov_len:]
+    )
+    with pytest.raises(Mp4Error, match="truncated field"):
+        parse_mp4_meta(bad)
+
+
 def test_sniffer_recognizes_skeleton():
     """The engine's magic-byte sniffer sees the writer's output as
     video/mp4 — the fixture exercises the REAL container shape."""

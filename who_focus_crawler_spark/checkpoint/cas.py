@@ -47,6 +47,7 @@ from __future__ import annotations
 
 import os
 import time
+import uuid
 from collections.abc import Callable
 from pathlib import Path
 
@@ -135,10 +136,23 @@ class SqliteCAS(CompareAndSwap):
 class LockFileCAS(CompareAndSwap):
     """Conditional update guarded by an O_CREAT|O_EXCL sentinel file —
     atomic create-if-absent, the primitive object stores offer as
-    conditional PUT. A crashed holder leaks the sentinel; the janitor
-    breaks locks older than ``stale_after`` seconds (two janitors
-    racing the same dead lock is harmless: unlink of an already-gone
-    path is ignored, and the O_EXCL create still admits exactly one)."""
+    conditional PUT. Each acquisition writes a unique token into its
+    sentinel.
+
+    A crashed holder leaks the sentinel; a janitor breaks one whose mtime
+    is older than ``stale_after`` seconds. Every removal — a janitor's
+    break and a holder's release — first rename()s the sentinel to a
+    private unique name (atomic: of racing removers exactly one gets it),
+    then unlinks that private path only if it is the sentinel the remover
+    meant (same token; for a break, still stale). A sentinel moved by
+    mistake — a live holder's, created after a stalled janitor judged its
+    predecessor stale, or a successor's, found by a holder that overran
+    ``stale_after`` — is put back with link(), which never clobbers a
+    sentinel created meanwhile. So no remover ever deletes a live holder's
+    sentinel. Two limits remain, both inherent to a TTL lock without
+    fencing tokens: the path is free for the two syscalls of a put-back,
+    and the sentinel's mtime is never refreshed, so ``attempt`` must
+    finish within ``stale_after`` or its lock can be broken mid-publish."""
 
     def __init__(
         self,
@@ -152,22 +166,57 @@ class LockFileCAS(CompareAndSwap):
         self.timeout = timeout
         self.stale_after = stale_after
 
-    def _acquire(self) -> int:
+    def _is_stale(self, path: Path) -> bool:
+        return time.time() - path.stat().st_mtime > self.stale_after
+
+    def _stale_token(self) -> bytes | None:
+        """The sentinel's token if it is older than ``stale_after``, else
+        None (also when there is no sentinel)."""
+        try:
+            if self._is_stale(self.lock_path):
+                return self.lock_path.read_bytes()
+        except FileNotFoundError:
+            pass
+        return None
+
+    def _remove_if(self, token: bytes, stale: bool) -> bool:
+        """Remove the sentinel iff it holds ``token`` (and, with ``stale``,
+        is still stale); otherwise leave it in place. True if removed."""
+        private = self.lock_path.with_name(
+            f"{self.lock_path.name}.{uuid.uuid4().hex}"
+        )
+        try:
+            os.rename(self.lock_path, private)
+        except FileNotFoundError:
+            return False  # already released or broken
+        try:
+            if private.read_bytes() == token and (
+                not stale or self._is_stale(private)
+            ):
+                return True
+            try:
+                os.link(private, self.lock_path)
+            except FileExistsError:
+                pass  # a new holder took the path during the put-back
+            return False
+        finally:
+            private.unlink()
+
+    def _acquire(self) -> bytes:
+        """Create the sentinel; returns the token written into it."""
+        token = f"{os.getpid()}:{uuid.uuid4().hex}".encode()
         deadline = time.monotonic() + self.timeout
         delay = 0.002
         while True:
             try:
-                return os.open(
+                fd = os.open(
                     self.lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY
                 )
             except FileExistsError:
-                try:
-                    age = time.time() - self.lock_path.stat().st_mtime
-                    if age > self.stale_after:
-                        self.lock_path.unlink(missing_ok=True)
-                        continue
-                except FileNotFoundError:
-                    continue  # holder released between open and stat
+                dead = self._stale_token()
+                if dead is not None:
+                    self._remove_if(dead, stale=True)
+                    continue
                 if time.monotonic() > deadline:
                     raise TimeoutError(
                         f"CAS lock {self.lock_path} held past "
@@ -175,20 +224,24 @@ class LockFileCAS(CompareAndSwap):
                     )
                 time.sleep(delay)
                 delay = min(delay * 2, 0.05)
+                continue
+            try:
+                os.write(fd, token)
+            finally:
+                os.close(fd)
+            return token
 
     def try_publish(
         self, expected_head: int | None, attempt: Callable[[], None]
     ) -> bool:
-        fd = self._acquire()
+        token = self._acquire()
         try:
-            os.write(fd, str(os.getpid()).encode())
-            os.close(fd)
             if self.head_fn() != expected_head:
                 return False
             attempt()
             return True
         finally:
-            self.lock_path.unlink(missing_ok=True)
+            self._remove_if(token, stale=False)
 
 
 #: backend name -> constructor(root, head_fn); the string form

@@ -42,8 +42,11 @@ class Mp4Error(ValueError):
     """Malformed or out-of-scope ISO-BMFF payload."""
 
 
-def _u(data: bytes, off: int, n: int) -> int:
-    if off + n > len(data):
+def _u(data: bytes, off: int, n: int, end: int) -> int:
+    """Big-endian field of ``n`` bytes at ``off``, which must end by
+    ``end``: the enclosing box's end for a leaf field, so a box too short
+    for its fields raises instead of reading the next box's bytes."""
+    if off + n > end:
         raise Mp4Error(f"truncated field at {off}")
     return int.from_bytes(data[off:off + n], "big")
 
@@ -60,11 +63,11 @@ def _walk(
             raise Mp4Error("box count exceeds cap")
         if pos + 8 > hi:
             raise Mp4Error(f"truncated box header at {pos}")
-        size = _u(data, pos, 4)
+        size = _u(data, pos, 4, hi)
         btype = data[pos + 4:pos + 8]
         body = pos + 8
         if size == 1:  # 64-bit largesize
-            size = _u(data, pos + 8, 8)
+            size = _u(data, pos + 8, 8, hi)
             body = pos + 16
         elif size == 0:  # box extends to end of enclosing scope
             size = hi - pos
@@ -82,28 +85,28 @@ def _walk(
                 raise Mp4Error("truncated ftyp")
             out["brand"] = data[body:body + 4].decode("latin-1")
         elif btype == b"mvhd":
-            ver = _u(data, body, 1)
+            ver = _u(data, body, 1, end)
             if ver == 1:
-                out["timescale"] = _u(data, body + 20, 4)
-                out["duration"] = _u(data, body + 24, 8)
+                out["timescale"] = _u(data, body + 20, 4, end)
+                out["duration"] = _u(data, body + 24, 8, end)
             else:
-                out["timescale"] = _u(data, body + 12, 4)
-                out["duration"] = _u(data, body + 16, 4)
+                out["timescale"] = _u(data, body + 12, 4, end)
+                out["duration"] = _u(data, body + 16, 4, end)
         elif btype == b"tkhd" and out["tracks"]:
-            ver = _u(data, body, 1)
+            ver = _u(data, body, 1, end)
             # width/height are 16.16 fixed point at the box tail
             if end - body < (32 if ver == 0 else 44) + 52:
                 raise Mp4Error("truncated tkhd")
-            out["tracks"][-1]["width"] = _u(data, end - 8, 4) >> 16
-            out["tracks"][-1]["height"] = _u(data, end - 4, 4) >> 16
+            out["tracks"][-1]["width"] = _u(data, end - 8, 4, end) >> 16
+            out["tracks"][-1]["height"] = _u(data, end - 4, 4, end) >> 16
         elif btype == b"mdhd" and out["tracks"]:
-            ver = _u(data, body, 1)
+            ver = _u(data, body, 1, end)
             if ver == 1:
-                out["tracks"][-1]["timescale"] = _u(data, body + 20, 4)
-                out["tracks"][-1]["duration"] = _u(data, body + 24, 8)
+                out["tracks"][-1]["timescale"] = _u(data, body + 20, 4, end)
+                out["tracks"][-1]["duration"] = _u(data, body + 24, 8, end)
             else:
-                out["tracks"][-1]["timescale"] = _u(data, body + 12, 4)
-                out["tracks"][-1]["duration"] = _u(data, body + 16, 4)
+                out["tracks"][-1]["timescale"] = _u(data, body + 12, 4, end)
+                out["tracks"][-1]["duration"] = _u(data, body + 16, 4, end)
         elif btype == b"hdlr" and out["tracks"]:
             if end - body < 12:
                 raise Mp4Error("truncated hdlr")
@@ -111,7 +114,7 @@ def _walk(
                 "latin-1"
             )
         elif btype == b"stsd" and out["tracks"]:
-            n = _u(data, body + 4, 4)
+            n = _u(data, body + 4, 4, end)
             if n >= 1 and end - body >= 16:
                 # first sample entry: 4-byte size then fourcc
                 out["tracks"][-1]["codec"] = data[
@@ -122,9 +125,9 @@ def _walk(
                 if out["tracks"][-1].get("kind") == "soun" and (
                     end - ebody >= 28
                 ):
-                    out["tracks"][-1]["channels"] = _u(data, ebody + 16, 2)
+                    out["tracks"][-1]["channels"] = _u(data, ebody + 16, 2, end)
                     out["tracks"][-1]["sample_rate"] = (
-                        _u(data, ebody + 24, 4) >> 16
+                        _u(data, ebody + 24, 4, end) >> 16
                     )
         # every other box (mdat, free, udta, …) is skipped by size —
         # NEVER read: a multi-GB mdat costs this walker nothing

@@ -42,6 +42,7 @@ from who_focus_crawler_spark.operators.frontier import (
 )
 from who_focus_crawler_spark.operators.politeness import apply_politeness, assign_seq
 from who_focus_crawler_spark.operators.robots import apply_robots, refresh_robots_cache
+from who_focus_crawler_spark.session import codegen_counters
 from who_focus_crawler_spark.sources.fixture_web import WebConfig, seed_urls
 
 
@@ -265,6 +266,7 @@ def run_batch(
     """Execute one fetch batch and commit it. Returns the batch stats."""
     _t0 = time.time()
     _marks: list[tuple[str, float]] = []
+    _cg0 = codegen_counters(spark) if _TIMING else None
 
     def _mark(label: str) -> None:
         if _TIMING:
@@ -536,6 +538,8 @@ def run_batch(
         for label, ts in _marks:
             parts.append(f"{label}={ts - prev:.1f}s")
             prev = ts
+        compiles, compile_ns = (b - a for a, b in zip(_cg0, codegen_counters(spark)))
+        parts.append(f"compiles={compiles} compile_ms={compile_ns // 1_000_000}")
         print(f"[wfc-timing] batch={batch} total={time.time() - _t0:.1f}s " + " ".join(parts), flush=True)
     cand.unpersist()
     fetched.unpersist()

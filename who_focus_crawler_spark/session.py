@@ -1,8 +1,28 @@
-"""SparkSession factory with the engine's pinned configs.
+"""SparkSession factories with the engine's pinned configs.
 
 Local mode is the test/bench environment (SURVEY.md probe P4); the configs
 are chosen so the same code runs unchanged on a multi-executor cluster via
 ``spark-submit --py-files`` (BASELINE.json north_rule).
+
+The pinned configs live in one place, ``engine_conf``. ``get_spark`` (tests,
+bench, tools) adds the local-process settings on top; ``submit_spark`` is
+what the ``spark-submit`` entry points under ``jobs/`` use, and leaves the
+master, driver memory and shuffle width to ``spark-submit``.
+
+Generated-class cache. Whole-stage codegen compiles each distinct plan
+fragment with Janino (~25 ms a class here) and keeps the result in a
+process-wide LRU cache of ``spark.sql.codegen.cache.maxEntries`` entries,
+100 by default. Measured working sets: one crawl batch (``plans/crawl.py::
+run_batch``) compiles ~242 distinct classes and one ``batch_jobs`` benchmark
+operation (frontier pipeline + corpus pipeline) ~110. At 100 entries the
+LRU evicts a batch's classes before the next batch asks for them again, so
+every identical batch recompiled all ~242, and the JIT then spent another
+7-15 s of CPU warming the fresh classes. ``CODEGEN_CACHE_ENTRIES`` holds both
+working sets with room for the crawl's optional operators (OPIC, sitemaps,
+content dedup, aging); in steady state a batch compiles only the ~10 classes
+that inline its per-batch int literals (``batch``, ``base_seq``). The cache
+is a static conf: it is read once, when the JVM first generates code, so it
+must be set on the builder before the session exists.
 """
 
 from __future__ import annotations
@@ -16,6 +36,48 @@ from pyspark.sql import SparkSession
 # seen-filters and golden determinism depend on it (SURVEY.md §4).
 DEFAULT_BUCKETS = int(os.environ.get("WFC_BUCKETS", "32"))
 
+# generated-class cache size; see the module docstring for the working sets
+CODEGEN_CACHE_ENTRIES = 1000
+
+
+def engine_conf() -> dict[str, str]:
+    """The engine's pinned configs, shared by every session factory.
+
+    - Arrow on: every UDF crossing is Arrow-batched (BASELINE.json input_hint:
+      "vectorized pandas/Arrow UDFs (no per-row Python) throughout").
+    - AQE on for joins/aggs, but bucket-aligned stages use explicit
+      ``repartition(P, ...)`` which AQE does not coalesce away.
+    - Codegen cache sized to the crawl batch's working set (module docstring).
+    """
+    return {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "50000",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+        # Propagate bucket-sort order from bucketed scans so joins of
+        # bucketBy+sortBy tables skip the per-task Sort as well as the
+        # Exchange. Sound here because operators/bucketing.py::
+        # write_bucketed always repartitions on the bucket key before
+        # writing -> exactly one file per bucket (the case where the
+        # reported ordering is actually true).
+        "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
+        # Python Data Source API (sources/warc_datasource.py): allow
+        # readers to take equality filters into the scan
+        "spark.sql.python.filterPushdown.enabled": "true",
+    }
+
+
+def _create(builder: SparkSession.Builder, conf: dict[str, str]) -> SparkSession:
+    for k, v in conf.items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
 
 def get_spark(
     app_name: str = "who_focus_crawler_spark",
@@ -23,44 +85,44 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's pinned configs.
+    """Build (or fetch) a local-process SparkSession with the engine's
+    pinned configs (``engine_conf``), plus:
 
-    - Arrow on: every UDF crossing is Arrow-batched (BASELINE.json input_hint:
-      "vectorized pandas/Arrow UDFs (no per-row Python) throughout").
-    - AQE on for joins/aggs, but bucket-aligned stages use explicit
-      ``repartition(P, ...)`` which AQE does not coalesce away.
     - Shuffle partitions default to core count, not 200 (local mode).
+    - Driver memory from ``WFC_DRIVER_MEM``; no Spark UI.
     """
     master = master or os.environ.get("WFC_MASTER", "local[*]")
     cores = os.cpu_count() or 8
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("WFC_SHUFFLE_PARTITIONS", str(cores)))
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("WFC_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Propagate bucket-sort order from bucketed scans so joins of
-        # bucketBy+sortBy tables skip the per-task Sort as well as the
-        # Exchange. Sound here because operators/bucketing.py::
-        # write_bucketed always repartitions on the bucket key before
-        # writing -> exactly one file per bucket (the case where the
-        # reported ordering is actually true).
-        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-        # Python Data Source API (sources/warc_datasource.py): allow
-        # readers to take equality filters into the scan
-        .config("spark.sql.python.filterPushdown.enabled", "true")
+    conf = engine_conf() | {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.driver.memory": os.environ.get("WFC_DRIVER_MEM", "16g"),
+        "spark.ui.enabled": "false",
+    }
+    return _create(
+        SparkSession.builder.master(master).appName(app_name),
+        conf | (extra_conf or {}),
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
+
+
+def submit_spark(app_name: str) -> SparkSession:
+    """Session for a ``spark-submit`` entry point (``jobs/*.py``): the
+    engine's pinned configs and nothing else. The master, driver memory
+    and shuffle partitions stay whatever ``spark-submit`` was given
+    (``--master``, ``--driver-memory``, ``--conf``); run under plain
+    ``python`` the master is PySpark's default, ``local[*]``."""
+    return _create(SparkSession.builder.appName(app_name), engine_conf())
+
+
+def codegen_counters(spark: SparkSession) -> tuple[int, int]:
+    """(Janino compiles, total compile ns) since this JVM started. Both are
+    process-wide, so diff two readings to cost one stretch of work; cache
+    hits add to neither."""
+    jvm = spark.sparkContext._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return (
+        int(metrics.METRIC_COMPILATION_TIME().getCount()),
+        int(codegen.compileTime()),
+    )
