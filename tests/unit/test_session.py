@@ -8,7 +8,7 @@ import os
 import subprocess
 import sys
 
-from who_focus_crawler_spark.session import engine_conf
+from who_focus_crawler_spark.session import codegen_counters, engine_conf, scoped_conf
 
 ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -46,3 +46,25 @@ def test_submit_session_keeps_submit_master_and_conf():
         "spark.sql.codegen.cache.maxEntries": engine_conf()["spark.sql.codegen.cache.maxEntries"],
         "spark.sql.execution.arrow.pyspark.enabled": "true",
     }
+
+
+def test_same_stage_code_under_another_stage_id_is_not_recompiled(spark):
+    """Swapping a union's inputs swaps their codegen stage ids (1 and 2).
+    The generated classes are keyed by code alone, so the second plan
+    reuses both classes of the first."""
+    a = spark.range(64).selectExpr("id * 7919 + 13 AS v").filter("v % 11 = 4")
+    b = spark.range(64).selectExpr("id * 104729 + 17 AS v").filter("v % 13 = 6")
+    first = sorted(r.v for r in a.union(b).collect())
+    before, _ = codegen_counters(spark)
+    assert sorted(r.v for r in b.union(a).collect()) == first
+    assert codegen_counters(spark)[0] - before == 0
+
+
+def test_scoped_conf_restores_set_and_unset_keys(spark):
+    key, unset = "spark.sql.shuffle.partitions", "spark.wfc.test.scoped"
+    outer = spark.conf.get(key)
+    with scoped_conf(spark, {key: "3", unset: "x"}):
+        assert spark.conf.get(key) == "3"
+        assert spark.conf.get(unset) == "x"
+    assert spark.conf.get(key) == outer
+    assert spark.conf.get(unset, None) is None

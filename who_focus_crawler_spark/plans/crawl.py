@@ -42,7 +42,7 @@ from who_focus_crawler_spark.operators.frontier import (
 )
 from who_focus_crawler_spark.operators.politeness import apply_politeness, assign_seq
 from who_focus_crawler_spark.operators.robots import apply_robots, refresh_robots_cache
-from who_focus_crawler_spark.session import codegen_counters
+from who_focus_crawler_spark.session import codegen_counters, scoped_conf
 from who_focus_crawler_spark.sources.fixture_web import WebConfig, seed_urls
 
 
@@ -260,10 +260,24 @@ def _opic_boosted_view(
     )
 
 
+# Session configs while a batch runs: no whole-stage codegen. A batch is
+# many short jobs over small stages, where fused classes cost more in Janino
+# and JIT time than they save (session.py docstring).
+BATCH_CONF = {"spark.sql.codegen.wholeStage": "false"}
+
+
 def run_batch(
     spark: SparkSession, cfg: CrawlConfig, catalog: SnapshotCatalog
 ) -> dict:
-    """Execute one fetch batch and commit it. Returns the batch stats."""
+    """Execute one fetch batch and commit it, with ``BATCH_CONF`` set on
+    the session. Returns the batch stats."""
+    with scoped_conf(spark, BATCH_CONF):
+        return _run_batch(spark, cfg, catalog)
+
+
+def _run_batch(
+    spark: SparkSession, cfg: CrawlConfig, catalog: SnapshotCatalog
+) -> dict:
     _t0 = time.time()
     _marks: list[tuple[str, float]] = []
     _cg0 = codegen_counters(spark) if _TIMING else None

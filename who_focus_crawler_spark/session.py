@@ -13,21 +13,46 @@ Generated-class cache. Whole-stage codegen compiles each distinct plan
 fragment with Janino (~25 ms a class here) and keeps the result in a
 process-wide LRU cache of ``spark.sql.codegen.cache.maxEntries`` entries,
 100 by default. Measured working sets: one crawl batch (``plans/crawl.py::
-run_batch``) compiles ~242 distinct classes and one ``batch_jobs`` benchmark
+run_batch``) compiled ~242 distinct classes with whole-stage codegen (fewer
+now that batches run without it, below) and one ``batch_jobs`` benchmark
 operation (frontier pipeline + corpus pipeline) ~110. At 100 entries the
 LRU evicts a batch's classes before the next batch asks for them again, so
 every identical batch recompiled all ~242, and the JIT then spent another
 7-15 s of CPU warming the fresh classes. ``CODEGEN_CACHE_ENTRIES`` holds both
 working sets with room for the crawl's optional operators (OPIC, sitemaps,
-content dedup, aging); in steady state a batch compiles only the ~10 classes
+content dedup, aging); in steady state a batch compiles only the few classes
 that inline its per-batch int literals (``batch``, ``base_seq``). The cache
 is a static conf: it is read once, when the JVM first generates code, so it
 must be set on the builder before the session exists.
+
+Cache keys. The key is the generated Java source, and whole-stage codegen
+names its class after the plan's codegen stage id. Under AQE those ids
+follow the order in which query stages are created, which depends on which
+shuffle finishes first, so the same fragment could come back under a new id
+and compile again (seen as an occasional 6 extra compiles, ~1.2 s, in a
+repeated crawl batch; identical code also compiled twice within one batch
+as stage 6 and stage 37). ``spark.sql.codegen.useIdInClassName`` is off, so
+a key depends on the code alone.
+
+Crawl batches run without whole-stage codegen (``plans/crawl.py::
+BATCH_CONF``, set only while ``run_batch`` runs). A batch is ~58 short
+Spark jobs over small stages (a few thousand rows each in the ``crawl_wide``
+benchmark), so fusing operators saves little per row, while each fused
+class costs a Janino compile and then C2 JIT time on its large methods.
+Measured on 4 cores with fused classes: the JIT used ~21-23 s of CPU in the
+first repeat of a batch and still ~7-8 s five repeats later, and the batch
+wall fell from ~10-12 s to ~8 s over those repeats, by an amount that
+depended on how far the JIT had got. Without fusion the operators run
+Spark's own iterator code, which is warm after the first batch, and only
+expression classes are generated: the first repeat took ~7 s and later
+ones ~5.5-6.5 s, with the JIT at ~15 s falling to ~6 s.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -47,7 +72,8 @@ def engine_conf() -> dict[str, str]:
       "vectorized pandas/Arrow UDFs (no per-row Python) throughout").
     - AQE on for joins/aggs, but bucket-aligned stages use explicit
       ``repartition(P, ...)`` which AQE does not coalesce away.
-    - Codegen cache sized to the crawl batch's working set (module docstring).
+    - Codegen cache sized to the crawl batch's working set, keyed by code
+      alone (module docstring).
     """
     return {
         "spark.sql.adaptive.enabled": "true",
@@ -58,6 +84,9 @@ def engine_conf() -> dict[str, str]:
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+        # class names without the AQE-order-dependent stage id, so the
+        # cache key is the code alone (module docstring)
+        "spark.sql.codegen.useIdInClassName": "false",
         # Propagate bucket-sort order from bucketed scans so joins of
         # bucketBy+sortBy tables skip the per-task Sort as well as the
         # Exchange. Sound here because operators/bucketing.py::
@@ -113,6 +142,23 @@ def submit_spark(app_name: str) -> SparkSession:
     (``--master``, ``--driver-memory``, ``--conf``); run under plain
     ``python`` the master is PySpark's default, ``local[*]``."""
     return _create(SparkSession.builder.appName(app_name), engine_conf())
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set runtime SQL configs for the duration of a block, then put back
+    the values the session had (unset keys are unset again)."""
+    before = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def codegen_counters(spark: SparkSession) -> tuple[int, int]:
